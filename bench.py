@@ -213,6 +213,11 @@ def _fingerprint(spark) -> dict:
         "python": platform.python_version(),
         "cpu_model": cpu_model,
         "cpus": os.cpu_count(),
+        # the core budget the run actually had: os.cpu_count() above is the
+        # host's, which a SPARK_GRAFT_CPUS-pinned run does not use
+        "master": spark.sparkContext.master,
+        "default_parallelism": spark.sparkContext.defaultParallelism,
+        "spark_graft_cpus": os.environ.get("SPARK_GRAFT_CPUS"),
         "calib_sec": calib_cpu,  # historical name; == calib_cpu_sec
         "calib_cpu_sec": calib_cpu,
         "calib_shuffle_sec": _calibrate_shuffle(spark),

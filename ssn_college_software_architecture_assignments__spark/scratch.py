@@ -67,15 +67,17 @@ def close_persist_scope(opened: bool, out) -> None:
     """Close the scope opened by :func:`open_persist_scope`, tying the
     collected frames' cache lifetime to ``out``: when the caller's last
     reference to the returned DataFrame is collected, every frame
-    unpersists (non-blocking). Unpersist is a pure perf hint — a
-    straggler reference to a derived frame simply recomputes — and
-    release errors are swallowed because at interpreter shutdown the
-    JVM gateway may already be gone."""
+    unpersists (non-blocking). ``out is None`` means the build raised:
+    the frames unpersist at once instead of waiting for the next
+    dispatch's clearCache. Unpersist is a pure perf hint — a straggler
+    reference to a derived frame simply recomputes — and release errors
+    are swallowed because at interpreter shutdown the JVM gateway may
+    already be gone."""
     if not opened:
         return
     frames = getattr(_PERSIST_SCOPE, "frames", None) or []
     _PERSIST_SCOPE.frames = None
-    if not frames or out is None:
+    if not frames:
         return
 
     def _release(frames=tuple(frames)):
@@ -85,6 +87,9 @@ def close_persist_scope(opened: bool, out) -> None:
             except Exception:
                 pass
 
+    if out is None:
+        _release()
+        return
     try:
         weakref.finalize(out, _release)
     except TypeError:

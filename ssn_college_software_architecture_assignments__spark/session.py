@@ -37,6 +37,18 @@ _RUNTIME_CONFS = {
 }
 
 
+# Static conf: only sessions that build_session creates get it, and
+# extra_confs overrides it. The ten JVM-relational common-18 queries
+# compile 124 classes; at Spark's default of 100 entries every warm pass
+# recompiled about 91 of them, and HotSpot had to JIT each reloaded class
+# again. The cache is Guava's: the bound is split over 4 LRU segments
+# filled by a per-JVM identity hash, and a sweep thrashes any segment
+# holding more than a quarter of the bound. At 128 one run recompiled 0
+# classes per pass and another 35; by the binomial tail, 160 overflows a
+# segment in about 1 run in 10; 256 leaves each twice its expected share.
+_CODEGEN_CACHE_MAX_ENTRIES = "256"
+
+
 def default_parallelism() -> int:
     """The session's core budget: ``SPARK_GRAFT_CPUS`` when the driver
     sets it (the bench contract — its low-core pass scales everything
@@ -147,6 +159,14 @@ def build_session(
     Local mode is a single JVM with N executor threads; on a real cluster
     the same confs hold — shuffle partitions should then track
     ``cores * executors`` (or be left to AQE coalescing, which we enable).
+
+    Sessions built here also get a generated-code cache sized above the
+    engine's sweeps (``spark.sql.codegen.cache.maxEntries``, see
+    ``_CODEGEN_CACHE_MAX_ENTRIES``), so re-running a plan reuses its
+    compiled classes. The conf is static: a session that already exists
+    (``getOrCreate`` returns it, or the driver built its own) keeps its
+    own value, and ``tune_session`` cannot change it. ``extra_confs``
+    overrides it like any other conf.
     """
     cpus = default_parallelism()
     builder = (
@@ -159,6 +179,7 @@ def build_session(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries", _CODEGEN_CACHE_MAX_ENTRIES)
     )
     for key, value in _RUNTIME_CONFS.items():
         builder = builder.config(key, value)

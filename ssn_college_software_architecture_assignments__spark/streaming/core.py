@@ -9,13 +9,15 @@ the batch-equivalence harness from SURVEY.md §5.2(5).
 
 from __future__ import annotations
 
+import shutil
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..catalog import read_parquet
 from ..scratch import scratch_dir
-from ..session import tune_session
+from ..session import default_parallelism, tune_session
 
 def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream the events fixture with timestamps identical to the batch
@@ -26,15 +28,15 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     others only through nanosAsLong as a raw-nanos BIGINT — and declaring
     the wrong one silently delivers values off by 1000x (a hardcoded
     BIGINT schema on a native-nanos build yielded 1970-era timestamps and
-    a 320x overcount in the t9 range join). So: probe the BATCH schema
-    from the parquet footer — one driver-side metadata read — declare
-    exactly that for the stream, and rebuild the µs timestamp only when
-    ts really arrives as a long (matching Catalog._normalize)."""
+    a 320x overcount in the t9 range join). So: take the BATCH schema
+    (``read_parquet``, inferred once per session and file signature),
+    declare exactly that for the stream, and rebuild the µs timestamp only
+    when ts really arrives as a long (matching Catalog._normalize)."""
     tune_session(spark)
     from pyspark.sql import types as T
 
     base = sf_dir.rstrip("/")
-    schema = spark.read.parquet(f"{base}/events.parquet").schema
+    schema = read_parquet(spark, f"{base}/events.parquet").schema
     # The fixture is a single file, not a directory; FileStreamSource
     # derives basePath from the non-glob path prefix and requires it to be
     # a directory, so address the file through a glob ("events.parque*")
@@ -56,11 +58,16 @@ def run_to_memory(
 ) -> DataFrame:
     """Execute a streaming query to completion over the available data
     (availableNow trigger) into an in-memory table; return it as a batch
-    DataFrame. Checkpoints go to a throwaway temp dir.
+    DataFrame. The checkpoint dir is removed once the stream terminates,
+    and the memory sink's temp view is dropped once the returned frame
+    has resolved it (the frame keeps the sink's rows; nothing of one
+    dispatch outlives its result).
 
     Stateful streaming creates one state store per shuffle partition per
     operator; at local scale that fixed cost dominates for FEW-key
-    queries, so the default pins the count low. Queries whose keyed
+    queries, so the default pins the count low: 8, or the session's core
+    budget when that is smaller (t1 through registry dispatch on 4 cores:
+    0.98-1.04 s with 8 partitions, 0.74-0.94 s with 4; identical rows). Queries whose keyed
     Python stage dominates instead (t6c: ~40k (user, day) groups, each
     one ``applyInPandasWithState`` call — 8 partitions leave most cores
     idle during the per-key Python work) pass ``state_partitions``
@@ -69,17 +76,21 @@ def run_to_memory(
     size it to key cardinality."""
     spark = stream_df.sparkSession
     name = f"stream_out_{uuid.uuid4().hex[:12]}"
-    checkpoint = scratch_dir(prefix="ssn_stream_ckpt_")
     if state_partitions is not None and state_partitions < 1:
         raise ValueError(
             f"state_partitions must be >= 1, got {state_partitions}"
         )
+    checkpoint = scratch_dir(prefix="ssn_stream_ckpt_")
     before = spark.conf.get("spark.sql.shuffle.partitions")
     # `is None`, not `or`: an explicit 0/falsy must fail loudly above,
     # never silently map to the few-key default (r18 advisory)
     spark.conf.set(
         "spark.sql.shuffle.partitions",
-        str(8 if state_partitions is None else state_partitions),
+        str(
+            min(8, default_parallelism())
+            if state_partitions is None
+            else state_partitions
+        ),
     )
     try:
         query = (
@@ -93,16 +104,19 @@ def run_to_memory(
         query.awaitTermination()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", before)
-    return spark.table(name)
+        shutil.rmtree(checkpoint, ignore_errors=True)
+    out = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return out
 
 
 def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream the documents fixture — the 'new documents arriving'
     source of the incremental curation operators (t12). Single-file
     fixture, so the glob trick from ``stream_events`` applies; schema
-    probed from the batch footer (no timestamp normalization needed —
+    taken from the batch read (no timestamp normalization needed —
     documents carries no temporal column)."""
     tune_session(spark)
     base = sf_dir.rstrip("/")
-    schema = spark.read.parquet(f"{base}/documents.parquet").schema
+    schema = read_parquet(spark, f"{base}/documents.parquet").schema
     return spark.readStream.schema(schema).parquet(f"{base}/documents.parque*")

@@ -45,3 +45,29 @@ def test_persist_scoped_frames_die_with_their_query(spark):
     del df
     gc.collect()
     assert cm.isEmpty(), "persist_scoped frames outlived the query result"
+
+
+def test_persist_scoped_frames_released_when_the_build_raises(spark):
+    """A registry query that persists a frame and then raises has no
+    result to tie the frame's lifetime to: the scope must unpersist it on
+    the error path, not leave it cached until the next dispatch."""
+    import pytest
+
+    from ssn_college_software_architecture_assignments__spark import registry
+    from ssn_college_software_architecture_assignments__spark.scratch import (
+        persist_scoped,
+    )
+
+    def failing(spark, sf_dir):
+        persist_scoped(spark.range(10)).count()
+        raise RuntimeError("build failed")
+
+    name = "zz_test_persist_then_raise"
+    registry.register(name)(failing)
+    try:
+        cm = spark._jsparkSession.sharedState().cacheManager()
+        with pytest.raises(RuntimeError, match="build failed"):
+            registry._REGISTRY[name].fn(spark, entrymod.SMOKE_SF_DIR)
+        assert cm.isEmpty(), "persist_scoped frame outlived the failed build"
+    finally:
+        del registry._REGISTRY[name]

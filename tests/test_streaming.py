@@ -11,13 +11,16 @@ from ssn_college_software_architecture_assignments__spark.streaming.windows impo
 )
 
 
-def test_tumbling_stream_equals_batch(spark, sf_dir):
-    streamed = {
+def _t1_rows(df):
+    return {
         (r["window_start"], r["event_type"]): (r["n"], r["sum_value"])
-        for r in t1_tumbling_window(spark, sf_dir).collect()
+        for r in df.collect()
     }
+
+
+def _t1_batch(spark, sf_dir):
     ev = Catalog(spark, sf_dir).events
-    batch = {
+    return {
         (r["ws"], r["event_type"]): (r["n"], r["sum_value"])
         for r in ev.groupBy(
             F.window("ts", "10 minutes").alias("w"), "event_type"
@@ -26,7 +29,38 @@ def test_tumbling_stream_equals_batch(spark, sf_dir):
         .select(F.col("w.start").alias("ws"), "event_type", "n", "sum_value")
         .collect()
     }
-    assert streamed == batch
+
+
+def test_tumbling_stream_equals_batch(spark, sf_dir):
+    assert _t1_rows(t1_tumbling_window(spark, sf_dir)) == _t1_batch(spark, sf_dir)
+
+
+def test_t1_dispatch_leaves_no_stream_scratch(spark, sf_dir):
+    """run_to_memory drops the memory sink's temp view once the returned
+    frame has resolved it, and removes its checkpoint dir once the stream
+    terminates; the frame still collects the sink's rows afterwards."""
+    import os
+    import tempfile
+
+    from ssn_college_software_architecture_assignments__spark import registry
+
+    def scratch():
+        views = {
+            t.name
+            for t in spark.catalog.listTables()
+            if t.name.startswith("stream_out_")
+        }
+        ckpts = {
+            d
+            for d in os.listdir(tempfile.gettempdir())
+            if d.startswith("ssn_stream_ckpt_")
+        }
+        return views, ckpts
+
+    before = scratch()
+    df = registry.load_all()["t1_tumbling_window"].fn(spark, sf_dir)
+    assert scratch() == before
+    assert _t1_rows(df) == _t1_batch(spark, sf_dir)
 
 
 def test_streaming_dedup_removes_double_delivery(spark, sf_dir):
